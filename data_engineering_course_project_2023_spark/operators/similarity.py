@@ -266,7 +266,8 @@ def blocked_cosine_pairs(
     values are the same doubles the per-pair expression produced (same
     fold order, same ops), and dot/(na·nb) is the same
     multiply-then-divide. (A codegen-unrolled fixed-width dot was
-    measured for the per-pair kernel and REJECTED: see dot_fixed.)"""
+    measured for the per-pair kernel and REJECTED: see the round-12
+    negative-result comment above ``norm()``.)"""
     e = spread(df).select(
         F.col(id_col),
         F.col(block_col).alias("_blk"),

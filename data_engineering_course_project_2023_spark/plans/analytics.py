@@ -800,13 +800,26 @@ def copair_components(t: Tables, max_iter: int = 40) -> DataFrame:
     # truncation the logical plan doubles per iteration and planning
     # itself OOMs long before the data does — the canonical iterative-
     # algorithm discipline (GraphFrames checkpoints the same way).
-    edges = coorder_adjacency(t["lineitem"]).localCheckpoint()
+    # The edge count (reducer sizing) and the initial label sum ride the
+    # two checkpoint jobs via observe(), as the per-round probe does
+    # below: no standalone count or agg job.
+    edge_obs = Observation("cc_edges")
+    edges = (
+        coorder_adjacency(t["lineitem"])
+        .observe(edge_obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
     nodes = t["lineitem"].select(F.col("l_partkey").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint()
     # convergence via the label sum: min-label propagation only ever
     # DECREASES labels, so sum(lbl) is strictly monotone until fixpoint —
     # a single cheap agg replaces a join-based changed-row count.
-    prev_sum = labels.agg(F.sum("lbl")).first()[0]
+    label_obs = Observation("cc_sum_init")
+    labels = (
+        nodes.select("node", F.col("node").alias("lbl"))
+        .observe(label_obs, F.sum("lbl").alias("s"))
+        .localCheckpoint()
+    )
+    prev_sum = label_obs.get["s"]
     spark = labels.sparkSession
     # NOTE: plain per-round propagation, NOT pointer jumping — measured
     # here, the extra label-of-label join per round costs more than the
@@ -817,7 +830,7 @@ def copair_components(t: Tables, max_iter: int = 40) -> DataFrame:
     # double-stepping: labels feeds the next step TWICE (union side +
     # join side), so skipping the materialization makes Spark recompute
     # the grouped frame and costs more than the barrier it saves.
-    with _iterative_shuffle_parts(spark, edges.count()):
+    with _iterative_shuffle_parts(spark, edge_obs.get["n"]):
         for i in range(max_iter):
             msgs = (
                 edges.join(labels, edges.src == labels.node)
@@ -826,7 +839,7 @@ def copair_components(t: Tables, max_iter: int = 40) -> DataFrame:
             # the convergence probe rides the checkpoint job via
             # observe(): one job per round instead of two (the separate
             # post-checkpoint agg was ~25% of end-to-end at sf0.1 —
-            # 4.8 s → 3.4 s, tools/cc_observe_probe.py)
+            # 4.8 s → 3.4 s, bit-equal labels)
             obs = Observation(f"cc_sum_{i}")
             labels = (
                 labels.unionByName(msgs)

@@ -35,8 +35,9 @@ from pyspark.sql.types import (
 # is pinned to UTC, so the wall-clock values are identical either way).
 
 # ---------------------------------------------------------------------------
-# 1. Driver benchmark tables (parquet already carries these; kept for
-#    validation and for readers that take schema-pinned JSON/CSV input).
+# 1. Driver benchmark tables: the read schema of sources.readers.
+#    load_table (checked against each file's footer column names, and
+#    pinned against Spark's own inference by tests/test_sources.py).
 # ---------------------------------------------------------------------------
 
 REGION = StructType(

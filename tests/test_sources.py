@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import glob
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_course_project_2023_spark import schemas
@@ -77,15 +81,151 @@ def test_scan_subset(spark):
     assert got == [10, 11, 12, 13, 14]
 
 
-def test_driver_schemas_match_files(spark):
-    """schemas.DRIVER_TABLES stays truthful against the real files."""
+def test_driver_schemas_match_files(spark, tmp_path):
+    """schemas.DRIVER_TABLES (names, order, types, nullability) matches
+    each file's own schema as Spark infers it, on the driver drop and
+    on a freshly generated ``gen_sf --vocab zipf`` directory.
+    load_table reads WITH the declared schema, so its output would pass
+    by construction; only the files themselves keep this check real."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    gen = str(tmp_path / "zipf")
+    subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "gen_sf.py"),
+         "--sf", "0.001", "--vocab", "zipf", "--out", gen],
+        cwd=repo, check=True, capture_output=True, timeout=300,
+    )
+    for sf_dir in ("/root/testdata/sf0.001", gen):
+        for name, declared in schemas.DRIVER_TABLES.items():
+            inferred = spark.read.parquet(
+                os.path.join(sf_dir, f"{name}.parquet")
+            ).schema
+            got = [(f.name, f.dataType.simpleString(), f.nullable) for f in inferred]
+            want = [(f.name, f.dataType.simpleString(), f.nullable) for f in declared]
+            assert got == want, f"{sf_dir}/{name}: file {got} != declared {want}"
+
+
+def _job_ids(spark, group, fn):
+    """Run ``fn`` inside job group ``group``; return (result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "mutate, column",
+    [
+        (lambda t: t.drop_columns(["r_name"]), "r_name"),
+        (lambda t: t.rename_columns(["r_regionkey", "r_nm"]), "r_name"),
+        (lambda t: t.select(["r_name", "r_regionkey"]), "r_name"),
+        (lambda t: t.append_column("r_extra", t["r_name"]), "r_extra"),
+    ],
+    ids=["missing", "renamed", "reordered", "extra"],
+)
+def test_load_table_rejects_undeclared_layout(spark, tmp_path, mutate, column):
+    """A declared read schema would turn a missing or renamed column into
+    silent nulls; load_table checks the footer first and raises, naming
+    the column, before any Spark job runs."""
+    import pyarrow.parquet as pq
+
     from data_engineering_course_project_2023_spark.sources.readers import load_table
 
-    for name, expected in schemas.DRIVER_TABLES.items():
-        actual = load_table(spark, "/root/testdata/sf0.001", name).schema
-        got = {(f.name, f.dataType.simpleString()) for f in actual}
-        want = {(f.name, f.dataType.simpleString()) for f in expected}
-        assert got == want, f"{name}: {got ^ want}"
+    table = pq.read_table("/root/testdata/sf0.001/region.parquet")
+    pq.write_table(mutate(table), str(tmp_path / "region.parquet"))
+
+    def load():
+        with pytest.raises(ValueError, match=repr(column)):
+            load_table(spark, str(tmp_path), "region")
+
+    _, jobs = _job_ids(spark, f"undeclared_{tmp_path.name}", load)
+    assert jobs == []
+
+
+def test_load_table_checks_first_part_file_of_a_directory(spark, tmp_path):
+    """A table stored as a directory of part files is checked against
+    its first part file's footer and read with the declared schema."""
+    from data_engineering_course_project_2023_spark.sources.readers import load_table
+
+    region = load_table(spark, "/root/testdata/sf0.001", "region")
+    region.write.parquet(str(tmp_path / "good" / "region.parquet"))
+    region.drop("r_name").write.parquet(str(tmp_path / "bad" / "region.parquet"))
+    got = load_table(spark, str(tmp_path / "good"), "region")
+    assert sorted(got.collect()) == sorted(region.collect())
+    with pytest.raises(ValueError, match="'r_name'"):
+        load_table(spark, str(tmp_path / "bad"), "region")
+
+
+def test_load_table_reads_nanos_without_touching_conf(spark, tmp_path):
+    """TIMESTAMP(NANOS) columns (an earlier driver drop's events.ts) are
+    read as int64 through the declared read schema and floored to
+    micros, with no session conf set or left behind."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_engineering_course_project_2023_spark.sources.readers import load_table
+
+    src = pq.read_table("/root/testdata/sf0.001/events.parquet").slice(0, 50)
+    ns = pc.add(src["ts"].cast(pa.timestamp("ns")), pa.scalar(999, pa.duration("ns")))
+    pq.write_table(
+        src.set_column(src.schema.get_field_index("ts"), "ts", ns),
+        str(tmp_path / "events.parquet"),
+    )
+    assert str(pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type) == (
+        "timestamp[ns]"
+    )
+    before = spark.conf.getAll
+    df = load_table(spark, str(tmp_path), "events")
+    got = {r["event_id"]: r["ts"] for r in df.collect()}
+    assert spark.conf.getAll == before
+    assert df.schema == schemas.EVENTS
+    assert got == dict(zip(src["event_id"].to_pylist(), src["ts"].to_pylist()))
+
+
+def test_schema_pinned_scans_start_no_jobs(spark, tmp_path):
+    """Scanning the driver tables and re-reading a stage plan without a
+    single Spark job: no footer-inference job per table or per stage."""
+    from data_engineering_course_project_2023_spark.operators import dedup
+    from data_engineering_course_project_2023_spark.sources.readers import (
+        load_table,
+        load_tables,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    _, jobs = _job_ids(
+        spark, "pinned_load_tables",
+        lambda: [t.schema for t in load_tables(spark, sf).values()],
+    )
+    assert jobs == []
+
+    docs = load_table(spark, sf, "documents")
+    frame = dedup.shingles(docs)
+    files = dedup._files_fingerprint(docs)
+    base = str(tmp_path / "stage")
+    # fresh stage: exactly the write's jobs, nothing for the re-read
+    _, plain = _job_ids(
+        spark, "pinned_plain_write",
+        lambda: frame.write.parquet(str(tmp_path / "plain")),
+    )
+    first, staged = _job_ids(
+        spark, "pinned_stage_write",
+        lambda: dedup.stage_parquet(frame, base, files, ("pinned",)).schema,
+    )
+    assert len(staged) == len(plain) > 0
+    # reused stage: zero jobs
+    again, jobs = _job_ids(
+        spark, "pinned_stage_reread",
+        lambda: dedup.stage_parquet(frame, base, files, ("pinned",)).schema,
+    )
+    assert jobs == []
+    (path,) = glob.glob(f"{base}-*")
+    assert first == again == spark.read.parquet(path).schema
 
 
 def test_write_jdbc_roundtrip_embedded_derby(spark):
